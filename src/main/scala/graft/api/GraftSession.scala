@@ -1,6 +1,12 @@
 package graft.api
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Session factory tuned for the graft engine.
   *
@@ -183,8 +189,39 @@ object Tables {
     * scan itself is tiny. */
   private val heavyPerRow: Set[String] = Set("documents", "embeddings")
 
+  /** The Spark schema of one parquet table, read from a footer on the
+    * driver: the schema `spark.read.parquet` would infer (same
+    * converter, same session conf — nanosAsLong, NTZ inference), but
+    * without the one-task Spark job that inference launches per load.
+    * Loads pass it through `.schema(...)`, so building a query's
+    * DataFrame reads a few footer bytes instead of running a job.
+    * A table may also be a directory of part files (Spark's own output,
+    * or a partitioned layout): like inference without mergeSchema, one
+    * data file's footer stands for all, and partition columns are still
+    * discovered from the paths. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val conf = state.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    // Spark's file listing skips the same names: _SUCCESS, _metadata,
+    // .crc sidecars, hidden staging dirs
+    def dataFile(st: FileStatus): Option[FileStatus] =
+      if (st.isFile) Some(st)
+      else fs.listStatus(st.getPath).iterator
+        .filterNot(c => c.getPath.getName.startsWith("_") || c.getPath.getName.startsWith("."))
+        .flatMap(dataFile).nextOption()
+    val file = dataFile(fs.getFileStatus(root)).getOrElse(
+      throw new java.io.FileNotFoundException(s"no parquet data file under $path"))
+    val footer = ParquetFileReader.readFooter(
+      HadoopInputFile.fromStatus(file, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
+
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"), name)
+    val path = s"$sfDir/$name.parquet"
+    val df = normalizeTs(spark.read.schema(footerSchema(spark, path)).parquet(path), name)
     // The test files are single-row-group parquet → the scan emits all
     // rows from ONE task, serializing the per-row compute. The guard is
     // on FILE count, not split count: byte-range splits of a
@@ -233,7 +270,7 @@ object Tables {
     * normalization — the Kafka-topic analog in this environment.
     */
   def loadStream(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet").schema
+    val raw = footerSchema(spark, s"$sfDir/$name.parquet")
     normalizeTs(spark.readStream.schema(raw)
       .option("pathGlobFilter", s"$name.parquet").parquet(sfDir), name)
   }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftKernels
@@ -25,12 +26,8 @@ object Dedup {
     * 128 bits the expectation is ~10^-19 — "exact" stays exact at the
     * 100 TB scale this file targets).
     */
-  // one last-call persist slot per LSH-family operator (see LastCallCache)
-  private val minhashSigCache = new LastCallCache
+  // exactKeepBest's hashed-corpus persist slot (see LastCallCache)
   private val keepBestHashCache = new LastCallCache
-  private val simhashSigCache = new LastCallCache
-  private val jaccardPairsCache = new LastCallCache
-  private val jaccardShCache = new LastCallCache
 
   /** 128-bit content hash for the exact-dedup family. A NULL text is
     * the ABSENCE of content, not content: md5(NULL)=NULL would collapse
@@ -103,7 +100,7 @@ object Dedup {
       // columns through the join made a pre-existing dup_count (e.g. a
       // frame re-deduped after exact()) an ambiguous reference (r13
       // review). score is evaluated against docs BEFORE the projection.
-      // LastCallCache slot (the minhashSigCache pattern): `hashed` —
+      // LastCallCache slot: `hashed` —
       // a full-corpus scan + normText + md5 per row, the operator's
       // dominant cost — feeds BOTH the best-score aggregate and the
       // verify join, and the two exchanges differ so ReuseExchange
@@ -167,11 +164,21 @@ object Dedup {
     * family (codegen'd joins; no interpreted per-bucket expansion):
     * banded rows (id, sig, band, bucket) → candidate (id_a, id_b,
     * sig_a, sig_b) pairs within buckets of size [2, maxBucket] (hot
-    * buckets dropped — boilerplate-cluster noise, the skew guard). */
+    * buckets dropped — boilerplate-cluster noise, the skew guard).
+    *
+    * ONE exchange on (band, bucket): the bucket size is a window count
+    * over that partitioning, the cap filters rows before any pair
+    * exists, and both self-join sides consume the same exchange
+    * (already clustered and sorted on the join key, so the join adds
+    * none; Spark reuses it for the second side). The banded input is
+    * therefore read once, with no persist: the signature kernel runs
+    * once per document. A hot bucket's rows are buffered (spillable)
+    * by one window task and dropped there, never paired. */
   private def cappedBucketPairs(banded: DataFrame, bucketCol: String,
                                 maxBucket: Int): DataFrame = {
-    val counts = banded.groupBy("band", bucketCol).agg(count(lit(1)).as("_bn"))
-    val capped = banded.join(counts.where(col("_bn").between(2, maxBucket)), Seq("band", bucketCol))
+    val capped = banded
+      .withColumn("_bn", count(lit(1)).over(Window.partitionBy(col("band"), col(bucketCol))))
+      .where(col("_bn").between(2, maxBucket))
       .drop("_bn")
     val a = capped.select(col("band"), col(bucketCol), col("id").as("id_a"), col("sig").as("sig_a"))
     val b = capped.select(col("band"), col(bucketCol), col("id").as("id_b"), col("sig").as("sig_b"))
@@ -214,12 +221,9 @@ object Dedup {
     // null-text docs carry no content to near-dup: left in, they all
     // hash to ONE shared per-band bucket (xxhash64 skips a null slice)
     // and pair up with null est_jaccard — drop them up front.
-    // Persisted: the banded frame feeds bucket counts AND both self-join
-    // sides — uncached, the signature kernel (the dominant dedup cost at
-    // scale) would run once per consumer over the full corpus.
-    val sigd = minhashSigCache(docs.where(col(textCol).isNotNull)
+    val sigd = docs.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"),
-        GraftKernels.minhashSigCol(col(textCol), shingleK, numHashes).as("sig")))
+        GraftKernels.minhashSigCol(col(textCol), shingleK, numHashes).as("sig"))
 
     val banded = sigd.select(
       col("id"), col("sig"),
@@ -272,9 +276,9 @@ object Dedup {
     * when template clusters must pair exhaustively.
     *
     * Pair generation is a capped band-bucket SELF-JOIN (hot buckets >
-    * maxBucket dropped — boilerplate clusters): every stage is a
-    * codegen'd join/agg, no interpreted per-bucket expansion, and no
-    * collect_list rows holding whole buckets in memory.
+    * maxBucket dropped — boilerplate clusters; see cappedBucketPairs):
+    * no interpreted per-bucket expansion, and no collect_list rows
+    * holding whole buckets in memory.
     */
   def simhashPairs(docs: DataFrame, textCol: String, idCol: String,
                    maxHamming: Int = 3, maxBucket: Int = 256,
@@ -295,10 +299,9 @@ object Dedup {
     // default for pipelines that don't need cross-engine replay.
     val sigOf: Column => Column =
       if (replayableHash) GraftKernels.simhashMd5Col else simhash
-    // null-text docs excluded for the same reason as minhashLsh;
-    // persisted for the same multi-consumer reason
-    val withSig = simhashSigCache(docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), sigOf(col(textCol)).as("sig")))
+    // null-text docs excluded for the same reason as minhashLsh
+    val withSig = docs.where(col(textCol).isNotNull)
+      .select(col(idCol).as("id"), sigOf(col(textCol)).as("sig"))
     val banded = withSig.select(col("id"), col("sig"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"), shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL).as("chunk"))): _*)).as("bc"))
@@ -334,15 +337,6 @@ object Dedup {
     // symmetric edge set in ONE scan of `pairs` (explode, not a union
     // of two scans): pairs is usually an UNCACHED verify-join output,
     // and a second scan re-executes that join end-to-end.
-    // localCheckpoint, not cache: every loop round below references
-    // edges, and each round's pointer-doubling SELF-JOIN doubles the
-    // plan tree — with edges carrying the whole verify pipeline's
-    // lineage (at probe scale, a 64-way replica union under several
-    // joins), the PLAN STRING Spark renders per execution event grows
-    // to GiB and OOMs the driver long before any task struggles.
-    // Checkpointing collapses edges to a leaf; blocks are freed by the
-    // ContextCleaner once the frame is unreachable (same contract as
-    // the label table hand-back below).
     // null-endpoint edges dropped UP FRONT, uniformly: an edge with a
     // null id is meaningless, the distributed joins would silently
     // ignore it anyway, and the driver-local finish crashed on it
@@ -356,27 +350,30 @@ object Dedup {
         struct(col("id_b").as("u"), col("id_a").as("v")))).as("_e"))
       .select(col("_e.u").as("u"), col("_e.v").as("v"))
       .distinct()
-      .localCheckpoint()
     // Adaptive finish: the edge set is the OUTPUT of LSH + verify —
     // near-dup graphs are tiny relative to the corpus (sf0.1: 41 edges
     // from 5k docs). Below the threshold the transitive closure is
     // driver-local union-find on collected (long, long) pairs (≤ ~3 MB
     // at the default — a model-scale artifact, like the IVF centroids),
-    // skipping ~2 s/round of distributed-iteration scheduling. Above it
-    // the pointer-doubling loop below runs fully distributed; callers
-    // probing the distributed path pass localThreshold = 0.
-    val nEdges = edges.count()
-    // the driver-local finish hard-codes LONG ids (getLong + the
+    // skipping ~2 s/round of distributed-iteration scheduling. ONE
+    // bounded collect decides and fetches at once: at most
+    // localThreshold + 1 edges ever reach the driver. Above it the
+    // pointer-doubling loop below runs fully distributed (re-running the
+    // edge pipeline once for its checkpoint); callers probing the
+    // distributed path pass localThreshold = 0, which skips the probe.
+    // The driver-local finish hard-codes LONG ids (getLong + the
     // (Long, Long) toDF): non-bigint id columns must take the
     // type-generic distributed path, or behavior (and output schema)
     // would diverge purely on input SIZE — small corpora crashing with
     // ClassCastException where production-scale runs work
     val idsAreLong = edges.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (nEdges > 0 && nEdges <= localThreshold && idsAreLong) {
-      val arr = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      // checkpoint blocks are ContextCleaner-reclaimed once `edges`
-      // goes unreachable — nothing to unpersist explicitly
+    val probe =
+      if (localThreshold > 0 && idsAreLong)
+        edges.limit(math.min(localThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+      else Array.empty[Row]
+    if (probe.nonEmpty && probe.length <= localThreshold) {
+      val arr = probe.map(r => (r.getLong(0), r.getLong(1)))
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x0: Long): Long = {
         var x = x0
@@ -398,13 +395,23 @@ object Dedup {
       import spark.implicits._
       return nodes.toSeq.map(n => (n, find(n))).toDF("id", "cluster_id")
     }
-    var labels = edges.groupBy(col("u").as("id"))
+    // localCheckpoint, not cache: every loop round below references
+    // edges, and each round's pointer-doubling SELF-JOIN doubles the
+    // plan tree — with edges carrying the whole verify pipeline's
+    // lineage (at probe scale, a 64-way replica union under several
+    // joins), the PLAN STRING Spark renders per execution event grows
+    // to GiB and OOMs the driver long before any task struggles.
+    // Checkpointing collapses edges to a leaf; blocks are freed by the
+    // ContextCleaner once the frame is unreachable (same contract as
+    // the label table hand-back below).
+    val cpEdges = edges.localCheckpoint()
+    var labels = cpEdges.groupBy(col("u").as("id"))
       .agg(least(min(col("v")), col("u")).as("cluster_id")).cache()
     var converged = false
     var iter = 0
     while (!converged && iter < maxIterations) {
       // 1. propagate: l'(u) = min(l(u), min over neighbors v of l(v))
-      val neighborMin = edges
+      val neighborMin = cpEdges
         .join(labels.withColumnRenamed("id", "v").withColumnRenamed("cluster_id", "nl"), Seq("v"))
         .groupBy(col("u").as("id")).agg(min(col("nl")).as("nmin"))
       val prop = labels.join(neighborMin, Seq("id"), "left")
@@ -503,37 +510,18 @@ object Dedup {
     // a broadcast filter): the old shape ran the shingle kernel — the
     // file's documented dominant cost — over the FULL corpus once per
     // join side; the verify stage only ever needs the candidates.
-    // The pairs frame is usually the LSH candidate pipeline's output
-    // and is consumed here by candIds AND the verify join — persisted
-    // so the candidate pipeline runs once, not once per consumer
-    // (measured as a 2-3× q60 regression when unpinned). A frame the
-    // CALLER already persisted is left under the caller's management —
-    // rotating it into the shared slot would let the NEXT call evict a
-    // cache the caller still holds.
-    val p = if (pairs.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      pairs else jaccardPairsCache(pairs)
-    // single pass over p (explode, not a union of two scans): a second
-    // scan of the still-uncached p inside the same job would race the
-    // first into recomputing the candidate pipeline. No distinct — the
-    // left-semi probe below dedups build keys in its hash table anyway,
-    // and the distinct was a whole extra exchange.
-    val candIds = p.select(explode(array(col("id_a"), col("id_b"))).as("_jid"))
-    // the shingled-candidates frame feeds BOTH pair-join sides (and
-    // often a downstream closure that re-reads the verify output) —
-    // cached, candidates-only, tiny. ONE eager action pins the whole
-    // chain: materializing sh computes p's partitions exactly once
-    // (candIds is its only consumer in this job) and caches both, so
-    // the verify join below reads only caches.
-    val sh = jaccardShCache(docs.where(col(textCol).isNotNull)
+    // `pairs` feeds candIds AND the verify join; when it is the LSH
+    // candidate pipeline, both read its final exchange, which Spark
+    // reuses within the one plan — no persist, no eager action.
+    // Single pass over pairs (explode, not a union of two scans); no
+    // distinct — the left-semi probe dedups build keys in its hash
+    // table anyway, and the distinct was a whole extra exchange.
+    val candIds = pairs.select(explode(array(col("id_a"), col("id_b"))).as("_jid"))
+    val sh = docs.where(col(textCol).isNotNull)
       .select(col(idCol).as("_jid"), col(textCol).as("_jtxt"))
       .join(candIds, Seq("_jid"), "left_semi")
-      .select(col("_jid"), shingles(col("_jtxt"), k).as("_jsh")))
-    // r17 optimization round re-measured this eager pin: REMOVING it is
-    // ~0.4 s SLOWER on the q24 shape even at bench scale (the two
-    // vector-fetch joins' broadcast builds each re-derive the candidate
-    // chain) — keep it.
-    sh.count()
-    p
+      .select(col("_jid"), shingles(col("_jtxt"), k).as("_jsh"))
+    pairs
       .join(sh.withColumnRenamed("_jid", "id_a").withColumnRenamed("_jsh", "sh_a"), "id_a")
       .join(sh.withColumnRenamed("_jid", "id_b").withColumnRenamed("_jsh", "sh_b"), "id_b")
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))

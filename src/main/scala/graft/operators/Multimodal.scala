@@ -141,7 +141,7 @@ object Multimodal {
       override def read(): Int = {
         bitOffset = 0
         if (streamPos >= buf.length) -1
-        else { val b = buf(streamPos.toInt) & 0xFF; streamPos += 1; b }
+        else { val b = buf(Math.toIntExact(streamPos)) & 0xFF; streamPos += 1; b }
       }
       override def read(b: Array[Byte], off: Int, len: Int): Int = {
         if (len == 0) return 0
@@ -149,7 +149,7 @@ object Multimodal {
         if (streamPos >= buf.length) -1
         else {
           val n = math.min(len.toLong, buf.length - streamPos).toInt
-          System.arraycopy(buf, streamPos.toInt, b, off, n)
+          System.arraycopy(buf, Math.toIntExact(streamPos), b, off, n)
           streamPos += n
           n
         }
@@ -172,24 +172,24 @@ object Multimodal {
           buf = java.util.Arrays.copyOf(buf, math.max(cap, buf.length * 2))
       override def write(b: Int): Unit = {
         flushBits()
-        val p = streamPos.toInt
-        ensure(p + 1)
+        val p = Math.toIntExact(streamPos)
+        ensure(Math.addExact(p, 1))
         buf(p) = b.toByte
         streamPos += 1
-        if (streamPos > count) count = streamPos.toInt
+        if (streamPos > count) count = Math.toIntExact(streamPos)
       }
       override def write(b: Array[Byte], off: Int, len: Int): Unit = {
         flushBits()
-        val p = streamPos.toInt
-        ensure(p + len)
+        val p = Math.toIntExact(streamPos)
+        ensure(Math.addExact(p, len))
         System.arraycopy(b, off, buf, p, len)
         streamPos += len
-        if (streamPos > count) count = streamPos.toInt
+        if (streamPos > count) count = Math.toIntExact(streamPos)
       }
       override def read(): Int = {
         bitOffset = 0
         if (streamPos >= count) -1
-        else { val b = buf(streamPos.toInt) & 0xFF; streamPos += 1; b }
+        else { val b = buf(Math.toIntExact(streamPos)) & 0xFF; streamPos += 1; b }
       }
       override def read(b: Array[Byte], off: Int, len: Int): Int = {
         if (len == 0) return 0
@@ -197,7 +197,7 @@ object Multimodal {
         if (streamPos >= count) -1
         else {
           val n = math.min(len.toLong, count - streamPos).toInt
-          System.arraycopy(buf, streamPos.toInt, b, off, n)
+          System.arraycopy(buf, Math.toIntExact(streamPos), b, off, n)
           streamPos += n
           n
         }
@@ -449,15 +449,23 @@ object Multimodal {
     * those re-walk the synchronized provider registry per record and
     * serialized this stage process-wide (see ImageSpi; first-accepting
     * SPI in registry order = ImageIO's reader pick, pinned byte-equal
-    * by ImageSpiParitySpec). canDecodeInput implementations mark/reset
-    * the stream, so probing SPIs in sequence leaves position intact. */
+    * by ImageSpiParitySpec). Each SPI is probed the way ImageIO's
+    * CanDecodeInputFilter probes it: mark, canDecodeInput with an
+    * IOException read as "cannot decode" (a short payload makes a
+    * probe's readFully throw EOF), reset in finally — so a throwing
+    * probe neither ends the search nor moves the next probe's start. */
   private[operators] def boundedImageRead(bytes: Array[Byte]): java.awt.image.BufferedImage = {
     val iis = new ImageSpi.ByteArrayImageInputStream(bytes)
     try {
+      def canDecode(candidate: javax.imageio.spi.ImageReaderSpi): Boolean =
+        try {
+          iis.mark()
+          try candidate.canDecodeInput(iis) finally iis.reset()
+        } catch { case _: java.io.IOException => false }
       var spi: javax.imageio.spi.ImageReaderSpi = null
       var i = 0
       while (spi == null && i < ImageSpi.readerSpis.length) {
-        if (ImageSpi.readerSpis(i).canDecodeInput(iis)) spi = ImageSpi.readerSpis(i)
+        if (canDecode(ImageSpi.readerSpis(i))) spi = ImageSpi.readerSpis(i)
         i += 1
       }
       if (spi == null) return null

@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Last-call persist slot for an operator whose plan fans out to several
-  * consumers of one expensive subtree (signature/sketch kernels feeding
-  * bucket counts AND both sides of the capped self-join — without a
+  * consumers of one expensive subtree (sketch kernels feeding bucket
+  * counts AND both sides of the capped self-join — without a
   * materialization point the kernel pass runs once PER consumer, and at
   * 100 TB the signature computation is the dominant cost of the whole
   * dedup pass).

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Entry-point knob parsing (no Spark session needed). */
@@ -27,6 +29,22 @@ class HarnessKnobsSpec extends AnyFunSuite {
       assert(!graft.api.GraftSession.localCheckpointTuning(cluster), cluster)
   }
 
+  test("a GraftSession-built session pins spark.shuffle.sort.bypassMergeThreshold=1") {
+    // a core conf: it applies only to the session GraftSession itself
+    // creates, and this JVM already runs the shared test session — so
+    // the session is built in a child JVM on the same classpath
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments
+      .asScala.filter(_.startsWith("--add-opens="))
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx512m") ++ jvmArgs ++
+      Seq("-cp", System.getProperty("java.class.path"), "graft.HarnessKnobsSpec")
+    val proc = new ProcessBuilder(cmd: _*)
+      .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).getLines().toList
+    assert(proc.waitFor(120, java.util.concurrent.TimeUnit.SECONDS), "child JVM did not exit")
+    assert(proc.exitValue() == 0, s"child JVM failed: $out")
+    assert(out.contains("spark.shuffle.sort.bypassMergeThreshold=1"), out)
+  }
+
   test("querySubsetFromEnv validates names and treats empty as no filter") {
     assert(SparkEntry.querySubsetFromEnv(None).isEmpty)
     assert(SparkEntry.querySubsetFromEnv(Some(" , ")).isEmpty)
@@ -35,5 +53,17 @@ class HarnessKnobsSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException](
       SparkEntry.querySubsetFromEnv(Some("q1_agg,zz_bogus")))
       .getMessage.contains("zz_bogus"))
+  }
+}
+
+object HarnessKnobsSpec {
+  /** Child-JVM side of the bypassMergeThreshold case: builds a
+    * GraftSession and prints the conf the session's context runs with. */
+  def main(args: Array[String]): Unit = {
+    val spark = graft.api.GraftSession("local[1]", shufflePartitions = 1)
+    try {
+      val key = "spark.shuffle.sort.bypassMergeThreshold"
+      println(s"$key=${spark.sparkContext.getConf.get(key, "unset")}")
+    } finally spark.stop()
   }
 }

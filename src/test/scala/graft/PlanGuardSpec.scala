@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards: the scale-critical plan properties
@@ -133,6 +135,83 @@ class PlanGuardSpec extends AnyFunSuite with SparkTestSession {
     // and the q48 scan must stay pruned to the 5 referenced columns
     assert(!plan("q48_sql_rows_window").contains("l_comment"),
       "dialect path reads columns the query never touches")
+  }
+
+  /** Runs `f` and returns the actions (QueryExecution listener func
+    * names) and the Spark jobs (by SQL execution id) it launched, read
+    * after the listener bus has delivered them. */
+  private def launched(f: => Any): (Seq[String], Seq[Option[String]]) = {
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val onAction = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        actions.add(fn)
+      def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        actions.add(fn)
+    }
+    val onJob = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+    }
+    org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(onAction)
+    spark.sparkContext.addSparkListener(onJob)
+    try {
+      f
+      org.apache.spark.graft.ListenerBusDrain(spark.sparkContext)
+      (actions.asScala.toSeq, jobs.asScala.toSeq)
+    } finally {
+      spark.listenerManager.unregister(onAction)
+      spark.sparkContext.removeSparkListener(onJob)
+    }
+  }
+
+  private def cacheManager =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+
+  test("table schemas come from the parquet footer: equal to inference for all ten tables") {
+    for (name <- graft.api.Tables.all) {
+      val path = s"$dir/$name.parquet"
+      // events carries INT64 TIMESTAMP(NANOS): the footer read must honor
+      // the session's nanosAsLong exactly as inference does
+      assert(graft.api.Tables.footerSchema(spark, path) == spark.read.parquet(path).schema, name)
+    }
+  }
+
+  test("building the eager-free queries launches zero Spark jobs") {
+    for (name <- Seq("q1_agg", "q4_multi_join", "q11_in_subquery", "q23_dedup_exact",
+        "q24_dedup_minhash", "q25_dedup_simhash", "q26_ngram_jaccard", "q64_contamination")) {
+      val (actions, jobs) = launched(SparkEntry.queries(name)(spark, dir))
+      assert(actions.isEmpty && jobs.isEmpty, s"$name: built with actions $actions, ${jobs.size} jobs")
+    }
+  }
+
+  test("building q57/q69 runs exactly one action: the bounded edge collect") {
+    for (name <- Seq("q57_dedup_clusters", "q69_leakage_split")) {
+      val (actions, jobs) = launched(SparkEntry.queries(name)(spark, dir))
+      assert(actions == Seq("collect"), s"$name: actions $actions")
+      assert(jobs.nonEmpty && jobs.forall(_.isDefined) && jobs.distinct.size == 1,
+        s"$name: jobs outside the one action: $jobs")
+    }
+  }
+
+  test("the dedup queries leave no CacheManager entry behind") {
+    spark.catalog.clearCache()
+    for (name <- Seq("q24_dedup_minhash", "q25_dedup_simhash", "q57_dedup_clusters", "q69_leakage_split")) {
+      SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+      assert(cacheManager.isEmpty, s"$name left a cached frame")
+    }
+  }
+
+  test("clusterPairs: q70 (localThreshold = 0) and non-Long ids take the distributed path") {
+    import spark.implicits._
+    def distributed(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collectFirst {
+        case _: org.apache.spark.sql.execution.LogicalRDD => true
+      }.isDefined
+    assert(!distributed(SparkEntry.queries("q57_dedup_clusters")(spark, dir)), "q57 left the local finish")
+    assert(distributed(SparkEntry.queries("q70_dedup_clusters_dist")(spark, dir)))
+    assert(distributed(graft.operators.Dedup.clusterPairs(Seq((1, 2), (2, 3)).toDF("id_a", "id_b"))))
   }
 
   test("dialect queries follow a dir SWITCH within one session (ctx cache rebuilds)") {

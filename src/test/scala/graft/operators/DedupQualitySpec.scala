@@ -378,6 +378,44 @@ class DedupQualitySpec extends AnyFunSuite with SparkTestSession {
     assert(planted >= 12, s"simhash found only $planted/15 planted near-dups")
   }
 
+  /** Rows out of the largest join in `df`'s executed plan (AQE stages
+    * included) — read after an action has run it. */
+  private def maxJoinOutputRows(df: org.apache.spark.sql.DataFrame): Long = {
+    object walk extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    walk.collect(df.queryExecution.executedPlan) {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+        j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
+    }.foldLeft(0L)(math.max)
+  }
+
+  test("LSH bucket cap boundary: maxBucket docs pair fully, maxBucket + 1 and singletons never pair") {
+    import spark.implicits._
+    // identical texts share every band bucket (minhash) and every chunk
+    // (simhash); each group's words are its own, so groups never share one
+    val maxBucket = 4
+    def group(g: Int, ids: Range): Seq[(Long, String)] = {
+      val text = (0 until 40).map(w => s"g${g}w$w").mkString(" ")
+      ids.map(i => (i.toLong, text))
+    }
+    val atCap = group(1, 1 to maxBucket)
+    val overCap = group(2, 101 to 101 + maxBucket)
+    val single = group(3, 201 to 201)
+    val hot = group(4, 301 until 341) // 40 docs: 780 pairs per band if expanded
+    val docs = (atCap ++ overCap ++ single ++ hot).toDF("doc_id", "text")
+    val want = (for (a <- 1 to maxBucket; b <- a + 1 to maxBucket) yield (a.toLong, b.toLong)).toSet
+
+    val mh = Dedup.minhashLsh(docs, "text", "doc_id", maxBucket = maxBucket)
+    val mhPairs = mh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(mhPairs == want, s"minhashLsh pairs $mhPairs")
+    val sh = Dedup.simhashPairs(docs, "text", "doc_id", maxBucket = maxBucket)
+    val shPairs = sh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(shPairs == want, s"simhashPairs pairs $shPairs")
+    // the cap applies BEFORE pair generation: no join ever sees the hot
+    // bucket's rows (expanded, one band alone would emit 780 rows)
+    for ((name, df) <- Seq("minhashLsh" -> mh, "simhashPairs" -> sh))
+      assert(maxJoinOutputRows(df) < 780, s"$name expanded a hot bucket")
+  }
+
   test("ngram jaccard verify matches the scala definition on candidate pairs") {
     import spark.implicits._
     val a = doc(50); val b = perturb(a, 0.1)

@@ -100,14 +100,33 @@ class ImageSpiParitySpec extends AnyFunSuite {
       "png truncated" -> png.take(30),
       "garbage" -> Array.tabulate[Byte](64)(i => (i * 7).toByte),
       "empty" -> Array.emptyByteArray,
-      "decompression bomb header" -> bomb)
+      "decompression bomb header" -> bomb,
+      // shorter than the PNG/GIF signatures: those SPIs' probes throw
+      // EOFException, which ImageIO reads as "cannot decode"
+      "png signature prefix" -> png.take(4),
+      "bmp truncated to 6 bytes" -> bmp.take(6))
+    // the short payloads must really make a probe throw, or they test nothing
+    for (tag <- Seq("png signature prefix", "bmp truncated to 6 bytes")) {
+      val bytes = payloads.toMap.apply(tag)
+      assert(Multimodal.ImageSpi.readerSpis.exists { spi =>
+        try { spi.canDecodeInput(new Multimodal.ImageSpi.ByteArrayImageInputStream(bytes)); false }
+        catch { case _: java.io.IOException => true }
+      }, s"no SPI probe throws on '$tag'")
+    }
+    // outcomes compared UNWRAPPED: a path that throws where the other
+    // returns null (or throws something else) is a divergence
+    def outcome(read: => java.awt.image.BufferedImage): Either[Class[_], java.awt.image.BufferedImage] =
+      try Right(read) catch { case scala.util.control.NonFatal(e) => Left(e.getClass) }
     payloads.foreach { case (tag, bytes) =>
-      val want = try readViaImageIO(bytes) catch { case scala.util.control.NonFatal(_) => null }
-      val got = try Multimodal.boundedImageRead(bytes) catch { case scala.util.control.NonFatal(_) => null }
-      assert((got == null) == (want == null), s"payload '$tag': got=${got != null} want=${want != null}")
-      if (got != null) {
-        assert(got.getWidth == want.getWidth && got.getHeight == want.getHeight, s"payload '$tag'")
-        assert(rgb(got) == rgb(want), s"payload '$tag' pixels")
+      (outcome(Multimodal.boundedImageRead(bytes)), outcome(readViaImageIO(bytes))) match {
+        case (Left(got), Left(want)) => assert(got == want, s"payload '$tag' threw")
+        case (Right(got), Right(want)) =>
+          assert((got == null) == (want == null), s"payload '$tag': got=${got != null} want=${want != null}")
+          if (got != null) {
+            assert(got.getWidth == want.getWidth && got.getHeight == want.getHeight, s"payload '$tag'")
+            assert(rgb(got) == rgb(want), s"payload '$tag' pixels")
+          }
+        case (got, want) => fail(s"payload '$tag': got $got, want $want")
       }
     }
   }
